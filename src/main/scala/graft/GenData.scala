@@ -47,7 +47,7 @@ object GenData {
     val outDir = args.lift(1).getOrElse("/root/repo/benchdata/sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val tables = args.lift(3).map(_.split(',').toSet)
-    val spark = Engine.build(master = "local[32]", shufflePartitions = 32)
+    val spark = Engine.build()
     generate(spark, inDir, outDir, factor, tables)
     spark.stop()
   }

@@ -20,6 +20,15 @@ import org.apache.spark.sql.types._
   */
 object Ivm {
 
+  /** Run `body`, reporting its wall seconds to `timer` under `label` —
+    * the phase hook the retract/LSM loops expose to Bench and IvmSpec. */
+  private def timed[A](timer: (String, Double) => Unit, label: String)(body: => A): A = {
+    val t0 = System.nanoTime()
+    val r = body
+    timer(label, (System.nanoTime() - t0) / 1e9)
+    r
+  }
+
   val refresh: QueryDef = QueryDef.sqlBacked(
     "ivm_refresh",
     """WITH changes AS (
@@ -432,21 +441,15 @@ object Ivm {
     * returned probe plan is lazy; callers time its materialization. */
   def bm25RetractRun(spark: SparkSession, dir: String,
       timer: (String, Double) => Unit = (_, _) => ()): DataFrame = {
-    def timed[A](label: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val r = body
-      timer(label, (System.nanoTime() - t0) / 1e9)
-      r
-    }
     Engine.table(spark, dir, "documents").createOrReplaceTempView("documents")
     TextAnalysis.bigramPostings(spark, "documents")
     val dt = spark.table("btok_tf")
     val statePath = Engine.scratchDir("graft_ivm_bm25_")
     val view = new IncrementalAggView(spark, Seq("doc_id", "token"), Seq("tf"), statePath)
-    timed("init") {
+    timed(timer, "init") {
       view.initialize(dt.select(col("doc_id"), col("token"), col("tf")))
     }
-    timed("refresh") {
+    timed(timer, "refresh") {
       view.applyDelta(dt.filter(col("doc_id") % 13 === 0)
         .select(col("doc_id"), col("token"), col("tf"), lit(-1L).as(view.freqCol)))
     }
@@ -623,18 +626,14 @@ object Ivm {
   def annRetractBuild(spark: SparkSession, dir: String,
       timer: (String, Double) => Unit = (_, _) => (),
       root: String = Engine.scratchDir("graft_ivm_ann_")): SegmentedIndexState = {
-    def timed[A](label: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val r = body
-      timer(label, (System.nanoTime() - t0) / 1e9); r
-    }
     val st = SegmentedIndexState(s"$root/base", s"$root/tombstones", s"$root/delta")
-    timed("build") { Similarity.writeIvfSq8Index(spark, dir, st.base) }
-    timed("retract") {
+    timed(timer, "build") { Similarity.writeIvfSq8Index(spark, dir, st.base) }
+    timed(timer, "retract") {
       // writeIvfSq8Index registered the `embeddings` view above
       spark.sql("SELECT vec_id AS cand_id FROM embeddings WHERE vec_id % 13 = 0")
         .write.mode("overwrite").parquet(st.tombstones)
     }
-    timed("append") {
+    timed(timer, "append") {
       Similarity.writeIvfSq8Index(spark, dir, st.delta, slice = "vec_id % 26 = 0")
     }
     st
@@ -728,18 +727,14 @@ object Ivm {
   def dedupRetractBuild(spark: SparkSession, dir: String,
       timer: (String, Double) => Unit = (_, _) => (),
       root: String = Engine.scratchDir("graft_ivm_dedup_")): SegmentedIndexState = {
-    def timed[A](label: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val r = body
-      timer(label, (System.nanoTime() - t0) / 1e9); r
-    }
     val st = SegmentedIndexState(s"$root/base", s"$root/tombstones", s"$root/delta")
-    timed("build") { Dedup.writeBandIndex(spark, dir, st.base) }
-    timed("retract") {
+    timed(timer, "build") { Dedup.writeBandIndex(spark, dir, st.base) }
+    timed(timer, "retract") {
       // dedup_sh registered by writeBandIndex's cachedShingles above
       spark.sql("SELECT doc_id FROM dedup_sh WHERE doc_id % 10 <> 0 AND doc_id % 2 = 0")
         .write.mode("overwrite").parquet(st.tombstones)
     }
-    timed("append") {
+    timed(timer, "append") {
       Dedup.writeBandIndex(spark, dir, st.delta, pred = "doc_id % 4 = 0")
     }
     st
@@ -837,18 +832,14 @@ object Ivm {
   def bm25LsmBuild(spark: SparkSession, dir: String,
       timer: (String, Double) => Unit = (_, _) => (),
       root: String = Engine.scratchDir("graft_ivm_bm25lsm_")): SegmentedIndexState = {
-    def timed[A](label: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val r = body
-      timer(label, (System.nanoTime() - t0) / 1e9); r
-    }
     Engine.table(spark, dir, "documents").createOrReplaceTempView("documents")
     val st = SegmentedIndexState(s"$root/base", s"$root/tombstones", s"$root/delta")
-    timed("init") { TextAnalysis.writeBm25Index(spark, dir, st.base) }
-    timed("retract") {
+    timed(timer, "init") { TextAnalysis.writeBm25Index(spark, dir, st.base) }
+    timed(timer, "retract") {
       spark.sql("SELECT doc_id FROM documents WHERE doc_id % 13 = 0")
         .write.mode("overwrite").parquet(st.tombstones)
     }
-    timed("append") {
+    timed(timer, "append") {
       TextAnalysis.writeBm25IndexSlice(spark, dir, st.delta, pred = "doc_id % 26 = 0")
     }
     st

@@ -44,4 +44,54 @@ class BenchSpec extends AnyFunSuite {
     assert(t.isDefined && t.get >= 0.0)
     assert(i == 3) // all attempts ran; the failed one contributed nothing
   }
+
+  test("splitCell writes once, then probes from a cold swap-cache state") {
+    var writes = 0
+    val firstProbeSaw = scala.collection.mutable.Buffer[Set[String]]()
+    val c = Bench.SplitCell("bench_spec_split_probe", Some("bench_spec_split_write"),
+      (s, _, _) => {
+        writes += 1
+        Engine.cacheSwap("bench_spec_split_posting", s.range(5).toDF("v")).count()
+      },
+      (s, _) => { _ =>
+        if (firstProbeSaw.isEmpty) firstProbeSaw += Engine.swapCacheKeys(s)
+        s.range(1).toDF("v")
+      })
+    val res = Bench.splitCell(spark, "unused", c)
+    assert(writes == 1)
+    assert(firstProbeSaw.toSeq == Seq(Set.empty[String]),
+      s"first probe must start cold, saw $firstProbeSaw")
+    assert(res.map(_._1) == Seq("bench_spec_split_write", "bench_spec_split_probe"))
+    assert(res.forall(_._2.exists(_ >= 0.0)))
+  }
+
+  test("a failing split-cell write records an error and yields None for every key") {
+    val c = Bench.SplitCell("bench_spec_fail_probe", Some("bench_spec_fail_write"),
+      (_, _, _) => sys.error("write failed"),
+      (s, _) => _ => s.range(1).toDF("v"))
+    val res = Bench.splitCell(spark, "unused", c)
+    assert(res == Seq("bench_spec_fail_write" -> None, "bench_spec_fail_probe" -> None))
+    assert(Bench.errors.get("bench_spec_fail_probe@unused").exists(_.contains("write failed")))
+  }
+
+  test("the sf0.1 key set equals the committed sf0.1 tier") {
+    val art = BenchArtifact.parse(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("bench/BENCH_LOCAL.json")),
+      java.nio.charset.StandardCharsets.UTF_8)).get
+    def keys(group: String): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      art.get(group).fieldNames.asScala.toSet
+    }
+    val pipeline = Bench.pipelineSet.map(_.name) ++ Bench.splitCells.flatMap(_.keys)
+    assert(Bench.tpch.map(_.name).toSet == keys("queries") && keys("queries").size == 5)
+    assert(pipeline.size == pipeline.distinct.size)
+    assert(pipeline.toSet == keys("pipeline") && keys("pipeline").size == 45)
+  }
+
+  test("jstr escapes quote, backslash and every control char") {
+    val raw = "a\"b\\c\nd\te\u0001f"
+    val esc = Bench.jstr(raw)
+    assert(esc == "\"a\\\"b\\\\c\\nd\\te\\u0001f\"")
+    assert(BenchArtifact.parse("{\"k\":" + esc + "}").get.get("k").asText == raw)
+  }
 }

@@ -134,8 +134,8 @@ class HotBucketSpec extends AnyFunSuite {
   test("incremental probe: deltaMod reslices the boundary, output complete at the new split") {
     // Same 40-copy corpus under deltaMod=4: ids 0,4,...,36 form a
     // 10-doc delta, the other 30 the index — 10×30 cross-boundary pairs
-    // at Jaccard exactly 1.0. Pins that the dev knob (IncrDev's
-    // fixed-size-delta measurements) moves BOTH the is_delta flag and
+    // at Jaccard exactly 1.0. Pins that the dev knob (the fixed-size-
+    // delta measurements SCALE.md records) moves BOTH the is_delta flag and
     // the per-side representative window together; a drifted window
     // partition would under-produce through the rep-expansion arm.
     val dir = corpus((0L until 40L).map(i => (i, textX)) :+ (41L -> textZ))
